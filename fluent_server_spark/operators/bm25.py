@@ -20,15 +20,18 @@ Spark shape — an inverted index IS a DataFrame:
 * `N` and `avgdl` are a one-row aggregate crossJoined onto the plan
   (broadcast of 1 row — the same corpus-constant pattern as
   operators/lm_quality.py's total-count join).
-* scoring a query set is: explode query terms (a SMALL table —
-  broadcast), equi-join postings ON term (only matching postings move),
-  per-(query,doc) hash agg of the per-term contributions, then one
-  window top-k per query. Cost is sum over query terms of df(t) — the
+* `bm25_topk` scores a query set without building that index: the
+  distinct query terms (a SMALL table) are broadcast and each doc's
+  token array counts tf for those terms only, so the only shuffles are
+  the small hit-stream aggregations and one window top-k per query.
+* `bm25_topk_from_index` probes a persisted index instead: equi-join
+  postings ON term (only matching postings move), per-(query,doc) hash
+  agg, window top-k. Cost is sum over query terms of df(t) — the
   classic inverted-index bound — never a corpus scan per query.
 * stop-term skew: a query term with huge df drags df(t) postings into
   the join; `max_df` drops terms seen in more than that fraction of
-  docs (the standard stop-list insurance, same dial as the Jaccard
-  count kernel's cap). Scores stay exact for the remaining terms.
+  docs (the standard stop-list insurance). Scores stay exact for the
+  remaining terms.
 
 Everything is integer/float Catalyst expressions — no UDFs — and every
 step replays in ANSI SQL, so the driver oracle covers the whole path.
@@ -79,132 +82,80 @@ def bm25_topk(
     query_id_col: str = "query_id",
     query_text_col: str = "query",
     max_df: float | None = None,
-    impl: str = "narrow",
 ) -> DataFrame:
     """Top-k docs per query by BM25. Returns (query_id, rk, doc_id,
     score) with rk 1..k; ties break by doc_id so results are total.
 
     `queries` is the SMALL side (a handful to thousands of rows) — its
-    exploded terms are broadcast into the postings join. Duplicate terms
+    exploded terms are broadcast into the probe. Duplicate terms
     within one query count once (set semantics, the common BM25 choice
     for short queries).
 
-    `impl` picks the physical shape (identical output, pinned in
-    tests/test_bm25.py):
-
-    * 'narrow' (default, r6): tf(t, d) for the query terms only, as a
-      narrow membership count over each doc's token array against the
-      BROADCAST distinct query-term set — the corpus-wide inverted
-      index is never materialized, so the (doc, term) / term / doc
-      aggregation exchanges of the full build disappear; the only
-      shuffles left are the tiny hit-stream aggregations. Same
-      integers (tf, df, dl, N) => bit-identical scores. Measured at
-      sf1.0: 4.4 s -> ~1.3 s. This is also the honest cost model of a
-      served probe (guide §2.4: remove shuffles outright) — the full
-      index build remains what write_bm25_index persists.
-    * 'agg': the r5 full postings+stats build (the oracle-twin proof
-      path, and the shape whose intermediates write_bm25_index stores).
+    Shape (r6): tf(t, d) for the query terms only, as a narrow
+    membership count over each doc's token array against the BROADCAST
+    distinct query-term set — the corpus-wide inverted index is never
+    materialized, so the (doc, term) / term / doc aggregation exchanges
+    of the full build disappear; the only shuffles left are the tiny
+    hit-stream aggregations. Measured at sf1.0: 4.4 s -> ~1.3 s against
+    the full postings build. This is also the honest cost model of a
+    served probe (it removes shuffles outright) — the full
+    index build remains what write_bm25_index persists, and
+    bm25_topk_from_index over it returns the same rows (pinned in
+    tests/test_bm25.py).
     """
-    if impl == "narrow":
-        toks = _tokens(F.col(text_col))
-        base = (
-            docs.select(F.col(id_col), toks.alias("_toks"))
-            .withColumn("dl", F.size("_toks"))
-            .filter(F.col("dl") > 0)  # token-less docs have no postings
-        )
-        qterms = queries.select(
-            F.col(query_id_col),
-            F.explode(_tokens(F.col(query_text_col))).alias("term"),
-        ).distinct()
-        uterms = qterms.select("term").distinct()
-        # Sentinel fusion (r6): the corpus stats (n_docs, avgdl) used to
-        # be a SECOND full tokenize pass over the docs — the only other
-        # consumer of `base`. Adding the empty-string sentinel to the
-        # broadcast term set makes every base doc emit exactly one tf=0
-        # sentinel row (no real token is '' — _tokens drops empties, so
-        # no query term is '' either), and the single checkpointed probe
-        # stream then carries both the hits AND one (dl) row per doc:
-        # ONE tokenize pass total, one parquet scan fewer in the plan.
-        # count/avg over the sentinel rows see the identical dl integers
-        # the dedicated pass saw => bit-identical stats.
-        sentinel = queries.sparkSession.range(1).select(
-            F.lit("").alias("term")
-        )
-        probe = (
-            base.crossJoin(F.broadcast(uterms.unionAll(sentinel)))
-            .withColumn(
-                "tf", F.size(F.filter("_toks", lambda x: x == F.col("term")))
-            )
-            .filter((F.col("tf") > 0) | (F.col("term") == ""))
-            .select(id_col, "term", "tf", "dl")
-            # three consumers (corpus stats + df stats + scoring). The
-            # checkpoint is O(n_docs + sum of df) ROWS — the sentinel
-            # row per doc makes it corpus-CARDINALITY (review r6: not
-            # "tiny"), but each row is ~30 bytes (id, '', 0, dl), so it
-            # is ~2% of corpus TEXT bytes and replaces the full second
-            # tokenize SCAN of those bytes that corpus stats used to
-            # cost — the trade wins by ~50x in bytes touched and grows
-            # with document length, not count
-            .localCheckpoint(eager=True)
-        )
-        corpus = probe.filter(F.col("term") == "").agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-        )
-        term_hits = probe.filter(F.col("term") != "")
-        stats = term_hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        if max_df is not None:
-            stats = stats.crossJoin(
-                F.broadcast(corpus.select("n_docs"))
-            ).filter(
-                F.col("df") <= F.lit(float(max_df)) * F.col("n_docs")
-            ).select("term", "df")
-        qstats = qterms.join(stats, "term").join(F.broadcast(corpus), F.lit(True))
-        idf = F.log(
-            (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        )
-        norm = F.col("tf") * (F.lit(k1) + 1.0) / (
-            F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-        )
-        scored = (
-            term_hits.join(F.broadcast(qstats), "term")
-            .groupBy(query_id_col, id_col)
-            .agg(F.round(F.sum(idf * norm), 6).alias("score"))
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            F.desc("score"), F.col(id_col)
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select(query_id_col, "rk", id_col, "score")
-        )
-
-    postings, doclen = bm25_index(docs, id_col, text_col)
-
-    stats = postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df")
+    toks = _tokens(F.col(text_col))
+    base = (
+        docs.select(F.col(id_col), toks.alias("_toks"))
+        .withColumn("dl", F.size("_toks"))
+        .filter(F.col("dl") > 0)  # token-less docs have no postings
     )
-    corpus = doclen.agg(
+    qterms = queries.select(
+        F.col(query_id_col),
+        F.explode(_tokens(F.col(query_text_col))).alias("term"),
+    ).distinct()
+    uterms = qterms.select("term").distinct()
+    # Sentinel fusion (r6): the corpus stats (n_docs, avgdl) used to
+    # be a SECOND full tokenize pass over the docs — the only other
+    # consumer of `base`. Adding the empty-string sentinel to the
+    # broadcast term set makes every base doc emit exactly one tf=0
+    # sentinel row (no real token is '' — _tokens drops empties, so
+    # no query term is '' either), and the single checkpointed probe
+    # stream then carries both the hits AND one (dl) row per doc:
+    # ONE tokenize pass total, one parquet scan fewer in the plan.
+    # count/avg over the sentinel rows see the identical dl integers
+    # the dedicated pass saw => bit-identical stats.
+    sentinel = queries.sparkSession.range(1).select(
+        F.lit("").alias("term")
+    )
+    probe = (
+        base.crossJoin(F.broadcast(uterms.unionAll(sentinel)))
+        .withColumn(
+            "tf", F.size(F.filter("_toks", lambda x: x == F.col("term")))
+        )
+        .filter((F.col("tf") > 0) | (F.col("term") == ""))
+        .select(id_col, "term", "tf", "dl")
+        # three consumers (corpus stats + df stats + scoring). The
+        # checkpoint is O(n_docs + sum of df) ROWS — the sentinel
+        # row per doc makes it corpus-CARDINALITY (not
+        # "tiny"), but each row is ~30 bytes (id, '', 0, dl), so it
+        # is ~2% of corpus TEXT bytes and replaces the full second
+        # tokenize SCAN of those bytes that corpus stats used to
+        # cost — the trade wins by ~50x in bytes touched and grows
+        # with document length, not count
+        .localCheckpoint(eager=True)
+    )
+    corpus = probe.filter(F.col("term") == "").agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )  # one row
-
+    )
+    term_hits = probe.filter(F.col("term") != "")
+    stats = term_hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if max_df is not None:
-        stats = stats.crossJoin(F.broadcast(corpus.select("n_docs"))).filter(
+        stats = stats.crossJoin(
+            F.broadcast(corpus.select("n_docs"))
+        ).filter(
             F.col("df") <= F.lit(float(max_df)) * F.col("n_docs")
         ).select("term", "df")
-
-    qterms = queries.select(
-        F.col(query_id_col), F.explode(_tokens(F.col(query_text_col))).alias("term")
-    ).distinct()
-
-    # restrict the (vocabulary-sized) term stats to the query terms
-    # BEFORE broadcasting: qstats has one row per (query, term) — tiny
     qstats = qterms.join(stats, "term").join(F.broadcast(corpus), F.lit(True))
-
     idf = F.log(
         (F.col("n_docs") - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
@@ -212,16 +163,15 @@ def bm25_topk(
     )
     norm = F.col("tf") * (F.lit(k1) + 1.0) / (
         F.col("tf")
-        + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        + F.lit(k1)
+        * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
     )
-
     # round BEFORE ranking: the per-doc sum's float accumulation order is
     # partition-dependent, so ranking raw doubles could flip near-tied
     # ranks between runs/engines; 6-decimal scores make the (score desc,
     # doc_id) order a pure function of the input
     scored = (
-        postings.join(F.broadcast(qstats), "term")
-        .join(doclen, id_col)
+        term_hits.join(F.broadcast(qstats), "term")
         .groupBy(query_id_col, id_col)
         .agg(F.round(F.sum(idf * norm), 6).alias("score"))
     )
@@ -279,7 +229,7 @@ def bm25_topk_from_index(
     rows for the query terms, and the doc lengths of candidate docs.
     Never re-tokenizes, never scans the corpus text. Bit-equal to the
     inline :func:`bm25_topk` (pinned in tests) because the stored
-    relations are exactly the inline intermediates."""
+    relations hold the same integers (tf, df, dl, N) its probe counts."""
     postings = spark.read.parquet(f"{path}/postings")
     doclen = spark.read.parquet(f"{path}/doclen")
     stats = spark.read.parquet(f"{path}/stats")

@@ -1,8 +1,9 @@
 """Deduplication operators for training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH, SimHash, n-gram Jaccard, and
-embedding-cosine near-dup. All are compositions of built-in DataFrame
-ops; the only Python is the SimHash UDF (bit math).
+embedding-cosine near-dup. Each operator has ONE physical plan. Python
+runs only in batched Arrow kernels: the hashed shingles, the minhash
+signature, the SimHash UDF and the Jaccard block-pair counter.
 
 Scale notes (the whole point of each design):
 * exact: one shuffle on a 32-hex key; min(doc_id) keeps the canonical
@@ -14,8 +15,9 @@ Scale notes (the whole point of each design):
   corpora (Broder '97 resemblance + banding).
 * SimHash: per-row 64-bit signature; candidate pairs via banded chunks
   of the signature (4x16-bit bands) -> equi-join, verify hamming<=k.
-* n-gram Jaccard: exact pairwise, crossJoin-bounded — the verifier /
-  small-N baseline, not the scale path (kept for oracle parity).
+* n-gram Jaccard: exact, via jaccard_join_blocks (block-pair overlap
+  counting in numpy, survivors only leave the task);
+  ngram_jaccard_pairs' crossJoin is the small-N test baseline.
 * embedding cosine: see operators/similarity.py (shared kernels).
 """
 
@@ -122,8 +124,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """EXACT pairwise n-gram Jaccard (the small-N / verification baseline).
 
-    O(n^2) crossJoin — bounded inputs only; the scale path is
-    minhash_lsh_pairs below, which this verifies in tests.
+    O(n^2) crossJoin — bounded inputs only; the exact scale path is
+    jaccard_join_blocks below, the approximate one minhash_lsh_pairs.
+    Tests verify both against this.
     """
     sh = with_shingles(docs, text_col, n).select(
         F.col(id_col).alias("a_id"), F.col("shingles").alias("a_sh")
@@ -140,186 +143,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def jaccard_join_prefix(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.2,
-    materialize: bool = True,
-) -> DataFrame:
-    """EXACT n-gram Jaccard similarity join at scale — prefix filtering
-    (Chaudhuri SSJoin '06 / Bayardo AllPairs '07 / Vernica VLDB'10), not
-    the O(n^2) cross join.
-
-    The shingle relation feeds THREE consumers (token explode + both
-    verify sides); with `materialize` it is localCheckpoint'ed once
-    (row-serialized — measured cheaper than both recompute and the
-    columnar cache at sf0.1, ~25% off the query) — at cluster scale
-    this is the temp-table landing of the tokenization pass.
-
-    Guarantee: under any global total order on shingles, two sets with
-    jaccard >= t share >= ceil(t*|X|) elements, so their globally
-    smallest common shingle lies within the first |X| - ceil(t*|X|) + 1
-    shingles of BOTH — an equi-join on prefix shingles alone has 100%
-    recall, and the exact verify keeps precision exact. Same output as
-    `ngram_jaccard_pairs` (which remains the O(n^2) test baseline), so
-    the plain pairwise SQL stays a valid oracle.
-
-    Global order = (corpus frequency asc, hashed shingle asc): rare-first
-    prefixes minimize candidate fan-out. Shuffles: one groupBy for
-    frequencies, one join back, one candidate equi-join — all on keys,
-    never all-pairs.
-
-    Round 3: everything past tokenization runs on 60-BIT HASHED shingles
-    (the minhash recipe): the candidate join shuffles 8-byte int keys
-    instead of gram strings, and the verify intersects int arrays — the
-    string-array verify was 80% of the query's wall at sf0.1 (18 s for
-    766k candidates). Jaccard over hashed grams equals jaccard over the
-    strings up to md5 collisions (~2^-60/pair); the generated oracle
-    replays the IDENTICAL hashed pipeline. Candidates additionally pass
-    the PPJoin POSITIONAL filter — with prefix tokens ranked by the
-    global order, a pair whose shared prefix token sits at ranks
-    (ra, rb) can overlap at most min(sa-ra, sb-rb)+1 grams, and
-    jaccard >= t needs overlap >= ceil(t/(1+t)*(sa+sb)); pairs whose
-    bound falls short are pruned before the distinct. Lossless by the
-    lemma (candidate pruning is not oracle-visible; only the final
-    pair set is).
-    """
-    sh = with_hashed_shingles(
-        docs.filter(F.col(text_col).isNotNull()), text_col, n
-    ).select(F.col(id_col).alias("_id"), "hg")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
-    toks = sh.select("_id", F.size("hg").alias("sz"), F.explode("hg").alias("h"))
-    freq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("_id").orderBy("df", "h")
-    prefix_len = (
-        F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ).cast("int")
-    pref = (
-        toks.join(freq, "h")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select("_id", "sz", "rn", "h")
-    )
-    # PPJoin length filter: jaccard >= t forces |A∩B| >= t*|A∪B| >= t*max
-    # size, and |A∩B| <= min size, so min >= t*max; positional filter:
-    # overlap needed = ceil(t/(1+t)*(sa+sb)), overlap possible from this
-    # shared token onward = min(sa-ra, sb-rb)+1
-    need = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("a_sz") + F.col("b_sz"))
-    )
-    possible = (
-        F.least(F.col("a_sz") - F.col("a_rn"), F.col("b_sz") - F.col("b_rn")) + 1
-    )
-    cand = (
-        pref.select(
-            F.col("_id").alias("a_id"), F.col("sz").alias("a_sz"),
-            F.col("rn").alias("a_rn"), "h",
-        )
-        .join(
-            pref.select(
-                F.col("_id").alias("b_id"), F.col("sz").alias("b_sz"),
-                F.col("rn").alias("b_rn"), "h",
-            ),
-            "h",
-        )
-        .filter(
-            (F.col("a_id") < F.col("b_id"))
-            & (F.least("a_sz", "b_sz") >= threshold * F.greatest("a_sz", "b_sz"))
-            & (possible >= need)
-        )
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    a_sh = sh.select(F.col("_id").alias("a_id"), F.col("hg").alias("a_sh"))
-    b_sh = sh.select(F.col("_id").alias("b_id"), F.col("hg").alias("b_sh"))
-    verified = cand.join(a_sh, "a_id").join(b_sh, "b_id")
-    inter = F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-    union = F.size(F.array_union("a_sh", "b_sh")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        verified.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
-
-
-def jaccard_join_count(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.2,
-    max_df: int | None = None,
-) -> DataFrame:
-    """EXACT n-gram Jaccard similarity join via the INVERTED-INDEX COUNT
-    kernel (Sarawagi & Kirpal SIGMOD'04; the reduce-side verify of
-    Vernica VLDB'10): explode distinct hashed shingles, self-join on the
-    token, and COUNT shared tokens per pair — overlap o gives
-    jaccard = o / (|A| + |B| - o) with no array materialization, no
-    array_intersect verify, and no candidate distinct (the groupBy IS
-    the dedup). Output is identical to jaccard_join_prefix /
-    ngram_jaccard_pairs: any pair with jaccard > 0 shares a token, so
-    every qualifying pair is counted, and o/(sa+sb-o) divides the same
-    integers as size(intersect)/size(union).
-
-    THRESHOLD-AWARE SCHEDULING (the r3 'adaptive prefix' lever): at
-    loose thresholds the prefix filter keeps ~(1-t) of each doc's tokens
-    — at t=0.2 that is 80%, so prefix-join candidates approach the full
-    token join while still paying the per-pair array verify (measured
-    9.5 s at sf0.1). This kernel pays the FULL token join — only ~25%
-    more join rows there (1.27M vs ~1.0M) — and replaces verify+distinct
-    with one hash aggregation (measured 4x faster at t=0.2). At tight
-    thresholds the inequality flips: prefixes shrink to (1-t)|A|+1
-    tokens while this kernel's join stays full-size, so
-    jaccard_join_auto routes on the threshold. Skew note: cost is
-    sum(df^2) over token document-frequencies; `max_df` is the O(df^2)
-    insurance for stop-gram-heavy corpora — tokens appearing in more
-    than max_df docs are EXCLUDED from the join (one extra df groupBy +
-    semi-join, paid only when set). With a cap the result is a
-    documented approximation: overlap misses capped tokens, so jaccard
-    is underestimated and pairs whose ONLY shared grams are stop-grams
-    drop out (the same recall trade as the LSH max_bucket_size cap,
-    pinned in tests). Default None = exact (measured max df 25 on the
-    driver corpus — no cap needed there).
-    """
-    sh = with_hashed_shingles(
-        docs.filter(F.col(text_col).isNotNull()), text_col, n
-    ).select(F.col(id_col).alias("_id"), F.size("hg").alias("sz"), "hg")
-    toks = sh.select("_id", "sz", F.explode("hg").alias("h"))
-    if max_df is not None:
-        freq = toks.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-        toks = toks.join(
-            freq.filter(F.col("df") <= max_df).select("h"), "h", "left_semi"
-        )
-    a = toks.select(
-        F.col("_id").alias("a_id"), F.col("sz").alias("a_sz"), "h"
-    )
-    b = toks.select(
-        F.col("_id").alias("b_id"), F.col("sz").alias("b_sz"), "h"
-    )
-    ov = (
-        a.join(b, "h")
-        .filter(
-            (F.col("a_id") < F.col("b_id"))
-            # PPJoin length filter, applied per token row before the agg
-            & (F.least("a_sz", "b_sz") >= threshold * F.greatest("a_sz", "b_sz"))
-        )
-        .groupBy("a_id", "b_id", "a_sz", "b_sz")
-        .agg(F.count(F.lit(1)).alias("o"))
-    )
-    jac = F.col("o").cast("double") / (
-        (F.col("a_sz") + F.col("b_sz") - F.col("o")).cast("double")
-    )
-    return (
-        ov.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
-
-
 def _block_overlap_fn(n_blocks: int, threshold: float, margin: float = 1e-6):
     """applyInPandas kernel for jaccard_join_blocks: one task owns one
     BLOCK PAIR (i, j) of the doc-block partition and computes the FULL
@@ -329,9 +152,10 @@ def _block_overlap_fn(n_blocks: int, threshold: float, margin: float = 1e-6):
     task and only surviving pairs are emitted. The overlap `o` and sizes
     are exact integers; the jaccard division/round happens back in
     Catalyst on the survivors, so emitted values are bit-identical to
-    the join+agg kernels. The in-kernel screen keeps pairs with
-    o/(sa+sb-o) >= threshold - margin — `round(jac, 6) >= t` can admit
-    jac down to t - 5e-7, so the margin is conservative."""
+    the crossJoin baseline's size(intersect)/size(union). The in-kernel
+    screen keeps pairs with o/(sa+sb-o) >= threshold - margin —
+    `round(jac, 6) >= t` can admit jac down to t - 5e-7, so the margin
+    is conservative."""
     import numpy as np
     import pandas as pd
 
@@ -485,11 +309,13 @@ def jaccard_join_blocks(
     n_blocks: int = 24,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity join via BLOCK-PAIR COMPLETE
-    COUNTING (r6). The count kernel (jaccard_join_count) is the right
-    ALGORITHM — overlap counts, no array verify — but its physical plan
-    materializes sum(df^2) join rows and then EXCHANGES the partially
-    aggregated pair counts (~|pairs sharing a token| rows: measured
-    ~127M generated / ~100M exchanged at sf1.0, 36.9 s driver-run),
+    COUNTING (r6). Overlap counting is the right ALGORITHM (Sarawagi &
+    Kirpal SIGMOD'04): a shared-token count o gives jaccard =
+    o / (|A| + |B| - o) with no array verify. As a token self-join plus
+    a groupBy(pair) count, though, the plan materializes sum(df^2) join
+    rows and then EXCHANGES the partially aggregated pair counts
+    (~|pairs sharing a token| rows: measured ~127M generated / ~100M
+    exchanged at sf1.0, 36.9 s end to end),
     because no single task ever holds a pair's complete count. Here the
     doc set is hash-partitioned into `n_blocks` blocks and each of the
     n_blocks*(n_blocks+1)/2 tasks owns one block PAIR: it receives both
@@ -500,16 +326,17 @@ def jaccard_join_blocks(
     (guide §2.3: shuffle keys and metadata, never the quadratic
     intermediate). The jaccard division + round + filter run in
     Catalyst on the surviving (a_id, b_id, a_sz, b_sz, o) rows — the
-    IDENTICAL integer inputs and double arithmetic as the other
-    kernels, so the output is bit-identical (pinned in
-    tests/test_dedup.py). Every unordered pair belongs to exactly one
-    block pair, so no cross-task dedup is needed.
+    same integers and double division as the size(intersect) /
+    size(union) of the crossJoin baseline ngram_jaccard_pairs, so the
+    output is bit-identical to it (pinned in tests/test_dedup.py).
+    Every unordered pair belongs to exactly one block pair, so no
+    cross-task dedup is needed.
 
     Scale: per-task pair volume is sum(df_i * df_j) ~ sum(df^2)/B^2 —
     `n_blocks` is the memory/parallelism dial (B^2 grows tasks
-    quadratically while per-task memory shrinks quadratically); the
-    hot-token skew cap story is unchanged from jaccard_join_count
-    (a stop-gram-heavy corpus should exact-dedup / cap first).
+    quadratically while per-task memory shrinks quadratically). There
+    is no hot-token cap: a stop-gram-heavy corpus should exact-dedup
+    first.
 
     Default 24 (r6, was 16): interleaved sweeps at sf0.1 AND sf1.0 show
     the two equal on median wall but 24 collapses the straggler TAIL —
@@ -571,29 +398,6 @@ def jaccard_join_blocks(
     )
 
 
-def jaccard_join_auto(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.2,
-    crossover: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard join with threshold-aware kernel choice: the
-    block-pair complete-count kernel below `crossover` (loose
-    thresholds — long prefixes make prefix-filtering pay full join cost
-    PLUS the array verify, and the overlap-count kernel's pair exchange
-    goes quadratic; the block kernel confines the quadratic inside
-    numpy tasks and never exchanges pair rows), the prefix-filter
-    kernel at or above it (tight thresholds — short prefixes collapse
-    the candidate join). All kernels are exact and output-identical
-    (pinned against the crossJoin baseline in tests/test_dedup.py), so
-    the choice is pure physical planning."""
-    if threshold < crossover:
-        return jaccard_join_blocks(docs, id_col, text_col, n, threshold)
-    return jaccard_join_prefix(docs, id_col, text_col, n, threshold)
-
-
 # ------------------------------------------------------------- MinHash LSH
 
 _MERSENNE = (1 << 31) - 1  # 31-bit field: a*h + b stays < 2^62, so the
@@ -613,22 +417,13 @@ def minhash_coeffs(n_perm: int = 64, seed: int = 1337) -> list[tuple[int, int]]:
     ]
 
 
-def hash_shingle(gram: F.Column) -> F.Column:
-    """60-bit shingle hash: first 15 hex chars of md5, base-16 decoded.
-
-    md5 (not xxhash64) so the DuckDB oracle can compute the IDENTICAL
-    value: `CAST('0x' || substr(md5(g), 1, 15) AS BIGINT)`. 60 bits keeps
-    every downstream product inside int64 under ANSI mode.
-    """
-    return F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("bigint")
-
-
 def _hashed_shingles_arrow(n: int):
-    """Arrow twin of the shingle->md5->60-bit chain (r6): whole batches
-    through Python's C-level split/join/hashlib instead of the Catalyst
-    split + per-gram slice/concat_ws/md5/conv expression tree, which
-    was ~2 s of every shingle-family query at sf1.0. Semantics are
-    replicated EXACTLY (pinned value-equal in tests/test_dedup.py):
+    """The shingle->md5->60-bit kernel (r6): whole batches through
+    Python's C-level split/join/hashlib. It replaced a Catalyst split +
+    per-gram slice/concat_ws/md5/conv expression tree, which was ~2 s
+    of every shingle-family query at sf1.0. The grams are with_shingles'
+    Spark semantics, hashed the way the DuckDB oracles hash them
+    (pinned in tests/test_dedup.py and by the oracles):
 
     * trim = strip of the SPACE character only (Spark's `trim`);
     * split on ASCII \\s+ keeping leading AND trailing empty strings
@@ -650,10 +445,10 @@ def _hashed_shingles_arrow(n: int):
         out = []
         for s in text:
             if s is None:
-                # Catalyst twin: size(NULL array) = -1 under non-ANSI,
-                # so the index range clamps to [0] and concat_ws over
-                # the NULL slice yields '' — one empty-string gram
-                # (callers filter NULL text; pinned for parity anyway)
+                # as with_shingles: size(NULL array) = -1 under
+                # non-ANSI, so the index range clamps to [0] and
+                # concat_ws over the NULL slice yields '' — one
+                # empty-string gram (callers filter NULL text)
                 s = ""
             # Spark's split(limit=-1) KEEPS trailing empty strings —
             # python re.split already matches that (unlike Java's
@@ -683,37 +478,31 @@ def with_hashed_shingles(
     text_col: str = "text",
     n: int = 3,
     out: str = "hg",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Distinct 60-bit hashed word-n-gram shingles (narrow op). Jaccard
-    over these equals jaccard over the string shingles up to md5
-    collisions (~2^-60 per pair) — and int arrays intersect far cheaper
-    than string arrays on the verify path. `impl='arrow'` (default, r6)
-    computes the identical values in a batched Python kernel
-    (_hashed_shingles_arrow — pinned equal in tests); 'fold' keeps the
-    pure-Catalyst expression chain."""
-    if impl == "arrow":
-        return docs.withColumn(
-            out, _hashed_shingles_arrow(n)(F.col(text_col))
-        )
-    sh = with_shingles(docs, text_col, n, out="_grams")
-    return sh.withColumn(
-        out, F.array_distinct(F.transform("_grams", hash_shingle))
-    ).drop("_grams")
+    """Distinct 60-bit hashed word-n-gram shingles (narrow op), computed
+    by the batched kernel _hashed_shingles_arrow. Each gram hashes to the
+    first 15 hex chars of its md5, base-16 decoded — md5 (not xxhash64)
+    so the DuckDB oracle computes the IDENTICAL value:
+    `CAST('0x' || substr(md5(g), 1, 15) AS BIGINT)`; 60 bits keep every
+    downstream product inside int64 under ANSI mode. Jaccard over these
+    equals jaccard over the string shingles up to md5 collisions (~2^-60
+    per pair) — and int arrays intersect far cheaper than string arrays
+    on the verify path."""
+    return docs.withColumn(out, _hashed_shingles_arrow(n)(F.col(text_col)))
 
 
 def minhash_signature_arrow(
     hashed: F.Column, n_perm: int = 64, seed: int = 1337
 ) -> F.Column:
-    """Arrow-vectorized twin of minhash_signature (r6): the same
-    (a*h + b) mod p running-min per permutation, computed in numpy over
-    whole record batches instead of a Catalyst fold that allocates a
-    64-wide array per shingle step. Pure int64 arithmetic with no
-    intermediate exceeding 2^62 (p = 2^31 - 1, a/b < 2^31, h % p <
-    2^31), so the values are BIT-IDENTICAL to the fold (pinned in
-    tests/test_dedup.py) — min is order-free. Measured: the fold's
+    """n_perm minhash values over hashed shingles: the running min of
+    (a*h + b) mod p per universal-hash permutation (Broder '97),
+    computed in numpy over whole record batches (r6). Pure int64
+    arithmetic with no intermediate exceeding 2^62 (p = 2^31 - 1,
+    a/b < 2^31, h % p < 2^31), so the values equal the DuckDB oracle's
+    replay exactly (queries/docs.py) — min is order-free; an empty
+    array keeps p in every slot. It replaced a Catalyst fold whose
     per-element zip_with/aggregate churn was the dominant cost of the
-    minhash signature stage at sf1.0 (~168M modular steps)."""
+    signature stage at sf1.0 (~168M modular steps)."""
     coeffs = minhash_coeffs(n_perm, seed)
 
     @F.pandas_udf("array<bigint>")
@@ -730,7 +519,7 @@ def minhash_signature_arrow(
             chunk = vals[s : s + CH]
             lens = np.array([len(x) for x in chunk], dtype=np.int64)
             if lens.sum() == 0:
-                continue  # empty arrays keep the fold's init value (P)
+                continue  # empty arrays keep the init value (P)
             flat = np.concatenate(
                 [np.asarray(x, dtype=np.int64) for x in chunk if len(x)]
             )
@@ -744,31 +533,6 @@ def minhash_signature_arrow(
         return pd.Series(list(out))
 
     return mh(hashed)
-
-
-def minhash_signature(
-    hashed: F.Column, n_perm: int = 64, seed: int = 1337
-) -> F.Column:
-    """n_perm minhash values via (a*h + b) mod p over hashed shingles.
-
-    Universal-hash permutation approximation (Broder '97). ONE pass over
-    the shingle array (fold with a 64-wide running-min accumulator)
-    instead of n_perm transform+array_min traversals — same output,
-    ~n_perm x less array allocation. Everything is a Catalyst array
-    expression — no Python, no shuffle.
-    """
-    coeffs = minhash_coeffs(n_perm, seed)
-    a_lit = F.array(*[F.lit(a).cast("bigint") for a, _ in coeffs])
-    b_lit = F.array(*[F.lit(b).cast("bigint") for _, b in coeffs])
-    init = F.array_repeat(F.lit(_MERSENNE).cast("bigint"), n_perm)
-
-    def step(acc: F.Column, x: F.Column) -> F.Column:
-        cand = F.zip_with(
-            a_lit, b_lit, lambda a, b: ((x % _MERSENNE) * a + b) % _MERSENNE
-        )
-        return F.zip_with(acc, cand, lambda m, c: F.least(m, c))
-
-    return F.aggregate(hashed, init, step)
 
 
 def band_bucket(sig: F.Column, band: int, rows_per_band: int) -> F.Column:
@@ -795,14 +559,9 @@ def minhash_lsh_pairs(
     n_bands: int = 16,
     threshold: float = 0.2,
     max_bucket_size: int | None = None,
-    materialize: bool = True,
-    sig_impl: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs at scale: minhash -> band -> bucket equi-join ->
-    exact-Jaccard verify on the candidates only. `sig_impl` picks the
-    signature kernel: 'arrow' (default, r6 — numpy batch min, see
-    minhash_signature_arrow) or 'fold' (the pure-Catalyst fold; both
-    bit-identical, pinned in tests).
+    exact-Jaccard verify on the candidates only.
 
     With n_perm=64, n_bands=16 (rows/band=4) the LSH S-curve crosses ~50%
     candidate probability at jaccard ~ (1/16)^(1/4) ~ 0.5; pairs above
@@ -818,43 +577,8 @@ def minhash_lsh_pairs(
     clusters), so near-dup LSH only owes pairs below the cap. Default
     None preserves full recall (and the driver oracle's semantics).
     """
-    rows_per_band = n_perm // n_bands
-    # Drop gram-less docs BEFORE shingling, as IsNotNull on the scan:
-    # hg is empty iff text is NULL (split of any non-null text yields
-    # >= 1 gram, and array_distinct keeps >= 1), and a post-hoc
-    # `size(hg) > 0` filter is pushed below the projection where it
-    # re-evaluates the whole shingle+md5+fold chain in an interpreted
-    # Filter node — measured 7x the entire signature stage at sf0.1.
-    sig_expr = (
-        minhash_signature_arrow if sig_impl == "arrow" else minhash_signature
-    )
-    sig = with_hashed_shingles(
-        docs.filter(F.col(text_col).isNotNull()), text_col, n
-    ).withColumn("sig", sig_expr(F.col("hg"), n_perm))
-    sig = sig.select(id_col, "hg", "sig")
-    # sig feeds three consumers (band explode + both verify sides).
-    # Measured at sf0.1: columnar persist() LOSES to recompute (encoding
-    # the big hg/sig arrays costs more than re-running the codegen'd
-    # pipeline), but row-serialized localCheckpoint WINS (~12% warm, 2x
-    # cold — it also truncates the JIT-heavy plan). At cluster scale
-    # this is the temp-table landing of the signature pass.
-    if materialize:
-        sig = sig.localCheckpoint(eager=True)
-
-    bands = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        band_bucket(F.col("sig"), b, rows_per_band).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    sig = _minhash_sig(docs, id_col, text_col, n, n_perm)
+    bands = _band_table(sig, id_col, n_perm, n_bands)
 
     if max_bucket_size is not None:
         wb = Window.partitionBy("band", "bucket")
@@ -896,25 +620,26 @@ def _minhash_sig(
     n: int,
     n_perm: int,
     seed: int = 1337,
-    materialize: bool = True,
-    sig_impl: str = "arrow",
 ) -> DataFrame:
-    """(id, hg, sig): hashed shingles + minhash signature (narrow).
+    """(id, hg, sig): hashed shingles + minhash signature, checkpointed.
 
     Gram-less docs are dropped as IsNotNull(text) on the scan — hg is
-    empty iff text is NULL, and a post-hoc `size(hg) > 0` filter gets
-    pushed below the projection where it re-evaluates the whole
-    shingle+md5+fold chain interpreted (measured 7x the signature
-    stage; see minhash_lsh_pairs). `sig_impl` as in minhash_lsh_pairs."""
-    sig_expr = (
-        minhash_signature_arrow if sig_impl == "arrow" else minhash_signature
-    )
+    empty iff text is NULL (split of any non-null text yields >= 1
+    gram, and array_distinct keeps >= 1), and a post-hoc `size(hg) > 0`
+    filter gets pushed below the projection where it re-evaluates the
+    whole shingle+md5+signature chain in an interpreted Filter node
+    (measured 7x the entire signature stage at sf0.1)."""
     sig = with_hashed_shingles(
         docs.filter(F.col(text_col).isNotNull()), text_col, n
-    ).withColumn("sig", sig_expr(F.col("hg"), n_perm, seed))
+    ).withColumn("sig", minhash_signature_arrow(F.col("hg"), n_perm, seed))
     sig = sig.select(id_col, "hg", "sig")
-    # typically two consumers (bands + verify): materialize once
-    return sig.localCheckpoint(eager=True) if materialize else sig
+    # sig feeds several consumers (band explode + the verify sides).
+    # Measured at sf0.1: columnar persist() LOSES to recompute (encoding
+    # the big hg/sig arrays costs more than re-running the codegen'd
+    # pipeline), but row-serialized localCheckpoint WINS (~12% warm, 2x
+    # cold — it also truncates the JIT-heavy plan). At cluster scale
+    # this is the temp-table landing of the signature pass.
+    return sig.localCheckpoint(eager=True)
 
 
 def _band_table(sig: DataFrame, id_col: str, n_perm: int, n_bands: int) -> DataFrame:
@@ -1167,63 +892,11 @@ def connected_components(
 # ----------------------------------------------------------------- SimHash
 
 
-def simhash_signature_native(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, sim): Charikar SimHash computed ENTIRELY in Catalyst — the
-    native twin of functions/text.py::simhash_udf (pinned bit-equal in
-    tests/test_dedup.py), so the signature stage needs no Python worker.
-
-    Shape: explode whitespace words, 64-bit word hash from the first 16
-    md5 hex chars (conv base-16, decimal carry through the two's-
-    complement reinterpretation so the UNSIGNED md5 value lands on the
-    same signed long the pandas UDF emits), then ONE groupBy with 64
-    SUM(CASE sign-bit) accumulators and a sign-threshold reassembly —
-    bit 63 folds in as long-min to avoid literal overflow, exactly like
-    the DuckDB oracle in queries/docs.py::_sql_simhash_neardup. Wordless
-    docs (NULL/empty text) left-join back as signature 0, matching
-    simhash64('') == 0. The shuffle key is id; the agg is map-side
-    partial like any SUM."""
-    words = docs.select(
-        id_col,
-        F.explode(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-        ).alias("wrd"),
-    ).filter(F.col("wrd") != "")
-    h_dec = F.conv(F.substring(F.md5("wrd"), 1, 16), 16, 10).cast("decimal(20,0)")
-    # 2^63 / 2^64 exceed long literals — carry them as decimal strings
-    two63 = F.lit("9223372036854775808").cast("decimal(20,0)")
-    two64 = F.lit("18446744073709551616").cast("decimal(21,0)")
-    h = F.when(h_dec >= two63, h_dec - two64).otherwise(h_dec).cast("long")
-    wh = words.select(id_col, h.alias("h"))
-    accs = [
-        F.sum(
-            F.when(
-                F.shiftrightunsigned("h", b).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"a{b}")
-        for b in range(64)
-    ]
-    acc = wh.groupBy(id_col).agg(*accs)
-    sim = F.when(F.col("a63") > 0, F.lit(-(2**63)).cast("long")).otherwise(
-        F.lit(0).cast("long")
-    )
-    for b in range(63):
-        sim = sim + F.when(F.col(f"a{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    sig = acc.select(id_col, sim.alias("sim"))
-    return docs.select(id_col).join(sig, id_col, "left").select(
-        id_col, F.coalesce("sim", F.lit(0).cast("long")).alias("sim")
-    )
-
-
 def simhash_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    impl: str = "pandas",
 ) -> DataFrame:
     """SimHash near-dup pairs: 4x16-bit banded signature join, verify
     hamming <= max_hamming. By pigeonhole, any pair within hamming<=3 of
@@ -1233,19 +906,11 @@ def simhash_pairs(
     Round-4 finding: the query's r3 cost (4.0 s at sf0.1) was the
     signature stage computed TWICE — both self-join sides re-derived
     the un-materialized sig relation. The localCheckpoint below fixes
-    that (1.29 s). A fully-native Catalyst signature
-    (simhash_signature_native, `impl='native'`) was then built as the
-    planned next lever and measured SLOWER than the checkpointed Arrow
-    UDF at sf0.1 (2.79 s vs 1.29 s — per-word md5+conv+64 SUM(CASE)
-    against one vectorized numpy pass over the vocabulary); it stays as
-    the bit-equal twin (pinned in tests) for plans that must avoid
-    Python workers."""
-    if impl == "native":
-        sig = simhash_signature_native(docs, id_col, text_col)
-    else:
-        sig = docs.select(
-            F.col(id_col), simhash_udf(F.col(text_col)).alias("sim")
-        )
+    that (1.29 s). A fully-native Catalyst signature (per-word
+    md5+conv+64 SUM(CASE)) measured SLOWER than the checkpointed Arrow
+    UDF at sf0.1 (2.79 s vs 1.29 s) and was retired; the DuckDB oracle
+    in queries/docs.py replays that per-word form."""
+    sig = docs.select(F.col(id_col), simhash_udf(F.col(text_col)).alias("sim"))
     # two consumers (left/right of the banded self-join): materialize the
     # skinny (id, sim) relation so signatures are computed once
     sig = sig.localCheckpoint(eager=True)

@@ -29,7 +29,7 @@ Spark shape:
   counts. Trigrams survive typos and morphology that whitespace BM25
   terms miss — the standard reason to fuse the two. Cost is bounded by
   sum over query grams of df(gram); `max_df` drops stop-grams (the
-  same insurance dial as BM25/jaccard_join_count).
+  same insurance dial as BM25's `max_df`).
 
 Determinism: per-(query,doc) RRF sums are rounded before ranking and
 ties break on doc_id, so the fused order is a pure function of the

@@ -95,13 +95,13 @@ def _exact_d2_matrix(V: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
 
 
 def assign_cells_arrow(centroids: list[list[float]]):
-    """Arrow-vectorized nearest-centroid assignment (r6): the same
-    exact-sequential squared-distance fold as the Catalyst literal
-    expression (see _exact_d2_matrix) with numpy doing the per-row work
-    in batches. Bit-identical cells (pinned in tests/test_ivf.py); the
-    Catalyst form (`assign_cells(..., impl='fold')`) measured ~9 s at
-    sf1.0 for 20k x 8 x 64 dims because the k*dim*3-op fold runs as an
-    interpreted expression tree per row."""
+    """Arrow-vectorized nearest-centroid assignment (r6): the
+    exact-sequential squared-distance fold of `_sq_dist` (see
+    _exact_d2_matrix) with numpy doing the per-row work in batches, so
+    cells match the DuckDB oracle of ann_topk_ivf. It replaced a literal
+    Catalyst expression that measured ~9 s at sf1.0 for 20k x 8 x 64
+    dims because the k*dim*3-op fold ran as an interpreted expression
+    tree per row."""
     C = np.array(centroids, dtype=np.float64)
 
     @F.pandas_udf("int")
@@ -120,27 +120,11 @@ def assign_cells(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     out: str = "cell",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Nearest-centroid assignment — narrow/map-only either way, no
-    join, no shuffle, no window. Ties break to the lowest cell (first
-    position). `impl='arrow'` (default, r6) evaluates the k x dim
-    distance folds in numpy with the identical sequential association
-    (assign_cells_arrow — bit-equal, pinned in tests); 'fold' keeps the
-    pure-Catalyst literal expression (array_position over the literal
-    distance array) for plans that must avoid Python workers."""
-    if impl == "arrow":
-        return vectors.withColumn(
-            out, assign_cells_arrow(centroids)(F.col(vec_col))
-        )
-    cents = F.array(
-        *[F.array(*[F.lit(x) for x in c]) for c in centroids]
-    )
-    d2s = F.transform(
-        cents, lambda c: _sq_dist(F.col(vec_col).cast("array<double>"), c)
-    )
-    cell = (F.array_position(d2s, F.array_min(d2s)) - 1).cast("int")
-    return vectors.withColumn(out, cell)
+    """Nearest-centroid assignment — narrow/map-only, no join, no
+    shuffle, no window. Ties break to the lowest cell (first minimum),
+    computed by the batched kernel assign_cells_arrow."""
+    return vectors.withColumn(out, assign_cells_arrow(centroids)(F.col(vec_col)))
 
 
 def _nearest_cells(

@@ -17,9 +17,9 @@ token sets are not. SemDeDup's published recipe:
 
 Spark shape (this module):
 
-* cell assignment is a PURE NARROW expression — the centroids ride the
-  plan as literals (same form as operators/ivf.py::assign_cells), the
-  argmin is array_position over the literal distances; no join, no
+* cell assignment is a PURE NARROW pass — one Arrow kernel computes
+  cell, distance and unit vector against the centroids it closes over
+  (same exact fold as operators/ivf.py::assign_cells); no join, no
   shuffle, no window. At 10^12 rows this is a map-only pass.
 * the canonical keep-order inside a cell is (distance-to-centroid DESC,
   id ASC) — the paper's farthest-from-centroid preference, made total
@@ -32,9 +32,10 @@ Spark shape (this module):
   doc's duplicate may itself shadow a third doc), which for corpus
   HYGIENE is the safe direction. The rule is a pure function of the
   input, so the DuckDB oracle replays it exactly.
-* pairwise compute is a SELF EQUI-JOIN ON cell with rank inequality —
-  never a cross join. One exchange on cell feeds both the rank window
-  and both join sides (same key), so Catalyst reuses the partitioning.
+* pairwise compute is ONE BLAS gram matrix per cell inside an
+  applyInPandas kernel — never a cross join, never pair rows. One
+  exchange on cell feeds both the rank window and the kernel grouping
+  (same key), so Catalyst reuses the partitioning.
 
 100 TB notes: k scales with the corpus (cells stay ~constant-sized, so
 sum(cell^2) stays ~linear in N); a pathologically hot cell (embedding
@@ -168,7 +169,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cell_pairs: int | None = None,
-    impl: str = "gram",
 ) -> DataFrame:
     """Flag semantic duplicates. Returns one row per input vector:
     (id_col, cell, cell_rank, is_semdup) where is_semdup means "an
@@ -177,46 +177,30 @@ def semdedup(
     Rank 1 per cell is never a duplicate; callers filter ~is_semdup for
     the kept corpus or aggregate for an audit table.
 
-    `impl`: 'gram' (default, r6) computes each cell's pairwise dots as
-    ONE BLAS gram matrix inside an applyInPandas kernel keyed on cell —
-    the flag falls out per vector with no pair rows, no distinct, no
-    join-back (measured 69 s -> ~4 s at sf1.0 driver shape; the r5
-    pair-join plan materialized ~25M pair rows each paying a 64-dim
-    Catalyst fold). 'join' keeps the r5 self-join formulation (the
-    oracle-twin proof path; pinned output-equal in tests/test_semdedup).
-    Margin entries are re-scored with the sequential fold so the eps
-    decision is bit-identical either way (see _cell_flags_fn).
+    Each cell's pairwise dots are ONE BLAS gram matrix inside an
+    applyInPandas kernel keyed on cell (r6) — the flag falls out per
+    vector with no pair rows, no distinct, no join-back (measured 69 s
+    -> ~4 s at sf1.0, registry-query shape, against the r5 self-join
+    plan, which materialized ~25M pair rows each paying a 64-dim
+    Catalyst fold).
+    Margin entries are re-scored with the sequential fold, so the eps
+    decision matches the DuckDB oracle of semdedup_drop (see
+    _cell_flags_fn; pinned against a Python reference in
+    tests/test_semdedup.py).
     """
-    # normalize ONCE per row (N norms), so each candidate pair costs a
-    # single dot fold instead of dot + two norms (3x the pair CPU —
-    # measured 6.5 -> ~3 s at sf0.1). The norm is materialized as its
-    # own column first — folding it inside the transform lambda would
-    # re-evaluate the aggregate per element. cos(a,b) == dot(a/|a|,
-    # b/|b|) up to rounding; the driver oracle replays the identical
-    # normalize-then-dot float ops so the eps comparison stays bit-equal
-    if impl == "gram":
-        # one Arrow pass for cell + distance + unit vector (bit-equal to
-        # the Catalyst expressions — see _assign_unit_arrow)
-        s = _assign_unit_arrow(centroids)(F.col(vec_col)).alias("_s")
-        assigned = vectors.select(F.col(id_col), s).select(
-            id_col,
-            F.col("_s.cell").alias("cell"),
-            F.col("_s.d2").alias("centroid_d2"),
-            F.col("_s.v").alias("_v"),
-        )
-    else:
-        assigned = (
-            with_cell_and_dist(vectors, centroids, vec_col)
-            .withColumn("_n", l2_norm(F.col(vec_col).cast("array<double>")))
-            .select(
-                F.col(id_col),
-                "cell",
-                "centroid_d2",
-                F.transform(
-                    F.col(vec_col).cast("array<double>"), lambda x: x / F.col("_n")
-                ).alias("_v"),
-            )
-        )
+    # normalize ONCE per row (N norms), so each pair costs a single dot
+    # instead of dot + two norms. cos(a,b) == dot(a/|a|, b/|b|) up to
+    # rounding; the DuckDB oracle replays the identical
+    # normalize-then-dot float ops so the eps comparison stays bit-equal.
+    # One Arrow pass yields cell + distance + unit vector (see
+    # _assign_unit_arrow).
+    s = _assign_unit_arrow(centroids)(F.col(vec_col)).alias("_s")
+    assigned = vectors.select(F.col(id_col), s).select(
+        id_col,
+        F.col("_s.cell").alias("cell"),
+        F.col("_s.d2").alias("centroid_d2"),
+        F.col("_s.v").alias("_v"),
+    )
     w = Window.partitionBy("cell").orderBy(F.desc("centroid_d2"), F.col(id_col))
     ranked = assigned.withColumn("cell_rank", F.row_number().over(w))
 
@@ -232,57 +216,15 @@ def semdedup(
                 "embedding distribution (collapsed/zero vectors?)"
             )
 
-    if impl == "gram":
-        # groupBy(cell) directly: the rank window already exchanged on
-        # cell, so the kernel grouping reuses that partitioning (a
-        # balanced-key repartition was measured here and REGRESSED —
-        # the extra exchange cost more than the spread bought at k=8)
-        return ranked.select(id_col, "cell", "cell_rank", "_v").groupBy(
-            "cell"
-        ).applyInPandas(
-            _cell_flags_fn(float(eps), id_col),
-            f"{id_col} long, cell int, cell_rank int, is_semdup boolean",
-        )
-
-    # MEASURED NEGATIVE RESULT (r5, kept for the record): expressing the
-    # flag as ONE left join with the rank/eps predicates in the join
-    # condition + a keyed EXISTS agg looks cleaner on paper (both sides
-    # derive from one ranked relation; no third join-back branch) but
-    # measured 2-7x SLOWER at sf0.1 (6-25 s vs 3.2-3.5 s): pushing the
-    # dot fold into a LeftOuter join condition forfeits the inner-join
-    # fast path, and the (id, cell, rank)-keyed agg exchange costs more
-    # than the branch it saves. The inner-pair + distinct + join-back
-    # below re-plans the narrow assignment + window for the final join
-    # (Catalyst reuses the cell exchange only on the pair side), which
-    # is the cheaper trade — the assignment is arithmetic-only and
-    # scan-local, while the join-condition shape taxes every candidate
-    # pair.
-    a = ranked.select(
-        F.col("cell"),
-        F.col("cell_rank").alias("a_rank"),
-        F.col("_v").alias("a_v"),
-    )
-    b = ranked.select(
-        F.col(id_col).alias("b_id"),
-        F.col("cell"),
-        F.col("cell_rank").alias("b_rank"),
-        F.col("_v").alias("b_v"),
-    )
-    dropped = (
-        a.join(b, "cell")
-        .filter(F.col("a_rank") < F.col("b_rank"))
-        .filter(dot(F.col("a_v"), F.col("b_v")) >= F.lit(float(eps)))
-        .select(F.col("b_id").alias(id_col))
-        .distinct()
-    )
-    return (
-        ranked.join(dropped.withColumn("_dup", F.lit(True)), id_col, "left")
-        .select(
-            id_col,
-            "cell",
-            "cell_rank",
-            F.coalesce("_dup", F.lit(False)).alias("is_semdup"),
-        )
+    # groupBy(cell) directly: the rank window already exchanged on
+    # cell, so the kernel grouping reuses that partitioning (a
+    # balanced-key repartition was measured here and REGRESSED —
+    # the extra exchange cost more than the spread bought at k=8)
+    return ranked.select(id_col, "cell", "cell_rank", "_v").groupBy(
+        "cell"
+    ).applyInPandas(
+        _cell_flags_fn(float(eps), id_col),
+        f"{id_col} long, cell int, cell_rank int, is_semdup boolean",
     )
 
 

@@ -7,9 +7,9 @@ so the whole kernel is JVM-side codegen, no Python in the loop.
 Scale path: random-hyperplane LSH bucketing — embeddings are signed
 against H fixed hyperplanes into an H-bit bucket; neighbor search probes
 only the query's bucket (optionally multi-probe with hamming-1 buckets).
-The hyperplanes are generated deterministically from a seed as literal
-arrays (broadcast with the plan), so bucketing is a narrow projection and
-search is an equi-join on bucket — no cross join at any scale.
+The hyperplanes are generated deterministically from a seed and ride
+the plan inside the bucketing kernel, so bucketing is a narrow projection
+and search is an equi-join on bucket — no cross join at any scale.
 
 An IVF variant would replace the hyperplanes with k-means centroids; the
 join/plumbing here is identical, so LSH is the shipped representative.
@@ -129,51 +129,13 @@ def with_lsh_bucket(
     seed: int = 42,
     vec_col: str = "embedding",
     out: str = "bucket",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """H-bit random-hyperplane signature as the ANN bucket (narrow op
-    either way). `impl='arrow'` (default, r6) runs the per-plane dots in
-    the exact-sequential numpy kernel (lsh_buckets_arrow — bit-equal,
-    pinned in tests); 'fold' keeps the literal-plane Catalyst
-    expression, whose interpreted fold dominated the bucketing stage."""
-    if impl == "arrow":
-        bkts = lsh_buckets_arrow(dim, n_planes, 1, seed)
-        return df.withColumn(out, F.element_at(bkts(F.col(vec_col)), 1))
-    planes = _hyperplanes(dim, n_planes, seed)
-    bucket = F.lit(0)
-    for bit, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        sign = (dot(F.col(vec_col), lit_plane) > 0).cast("int")
-        bucket = bucket + sign * F.lit(1 << bit)
-    return df.withColumn(out, bucket)
-
-
-def _dot_seq_arrow():
-    """Arrow-batched dot product with SEQUENTIAL summation order.
-
-    numpy's own reductions (np.dot / einsum / sum) re-associate terms
-    (pairwise/SIMD), which could flip the last bit vs the Catalyst fold;
-    this kernel instead walks the dimensions in index order with
-    vectorized column ops — acc = ((0 + p_1) + p_2) + ... per row, the
-    EXACT association the fold uses — so results are bit-identical to
-    `dot` and every value-hash oracle stays green (pinned in
-    tests/test_similarity.py). Built lazily (per call) so the module
-    import never registers a UDF."""
-
-    @F.pandas_udf("double")
-    def dot_seq(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        av = np.array(a.to_list(), dtype=np.float64)
-        bv = np.array(b.to_list(), dtype=np.float64)
-        acc = np.zeros(len(av))
-        for i in range(av.shape[1]):
-            acc = acc + av[:, i] * bv[:, i]
-        return pd.Series(acc, index=a.index)
-
-    return dot_seq
+    """H-bit random-hyperplane signature as the ANN bucket (narrow op),
+    computed by the exact-sequential numpy kernel lsh_buckets_arrow. It
+    replaced a literal-plane Catalyst expression whose interpreted fold
+    dominated the bucketing stage."""
+    bkts = lsh_buckets_arrow(dim, n_planes, 1, seed)
+    return df.withColumn(out, F.element_at(bkts(F.col(vec_col)), 1))
 
 
 def lsh_buckets_arrow(
@@ -184,11 +146,12 @@ def lsh_buckets_arrow(
     dot uses the SEQUENTIAL per-dimension association of the Catalyst
     `dot` fold (acc = acc + v_k*p_k in index order, vectorized across
     rows), so the sign tests — and therefore the buckets — are
-    BIT-IDENTICAL to with_lsh_bucket / lsh_band_table (pinned in
-    tests/test_similarity.py). Motivation (measured, sf1.0): the
-    broadcast-planes join + interpreted fold + groupBy(id, tbl) bucket
-    assembly cost ~1.5 s and one exchange; this is a single narrow
-    ArrowEvalPython node."""
+    BIT-IDENTICAL to the DuckDB oracles' replay (queries/vectors.py;
+    also pinned against a numpy reference in tests/test_similarity.py).
+    Motivation (measured, sf1.0): the broadcast-planes join +
+    interpreted fold + groupBy(id, tbl) bucket assembly it replaced cost
+    ~1.5 s and one exchange; this is a single narrow ArrowEvalPython
+    node."""
     planes = np.array(
         [
             _hyperplanes(dim, n_planes, seed + 1000 * t)
@@ -285,47 +248,6 @@ def _gram_pairs_fn(threshold: float, margin: float = 1e-6):
     return fn
 
 
-def lsh_band_table(
-    vectors: DataFrame,
-    dim: int,
-    n_planes: int,
-    n_tables: int,
-    seed: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, tbl, bkt) bucket assignments for all tables, via a BROADCAST
-    PLANES TABLE instead of literal plane arrays. Embedding the
-    n_tables x n_planes x dim plane values as plan literals (the r1-r3
-    formulation) built a ~4k-node expression tree whose per-run Catalyst
-    planning + interpreted evaluation cost 2.4-6.4 s at sf0.1 — more
-    than the entire candidate join. Here the planes are 32 broadcast
-    ROWS: one broadcast nested-loop join (bounded: n_tables*n_planes
-    rows), the SAME per-plane dot fold, then bucket assembly as an
-    integer SUM(sign << bit) groupBy — bit-identical buckets (integer
-    addition is order-free; the per-plane dot is the same fold), a
-    constant-size plan, and the groupBy key is (id, tbl) so the shuffle
-    is the skinny id relation, never the vectors."""
-    rows = []
-    for t in range(n_tables):
-        for bit, p in enumerate(_hyperplanes(dim, n_planes, seed + 1000 * t)):
-            rows.append((t, bit, p))
-    pl = vectors.sparkSession.createDataFrame(
-        rows, "tbl int, bit int, plane array<double>"
-    )
-    signed = vectors.select(id_col, vec_col).crossJoin(F.broadcast(pl)).select(
-        id_col,
-        "tbl",
-        (
-            (dot(F.col(vec_col), F.col("plane")) > 0).cast("int")
-            * F.expr("shiftleft(1, bit)")
-        ).alias("term"),
-    )
-    return signed.groupBy(id_col, "tbl").agg(
-        F.sum("term").cast("int").alias("bkt")
-    )
-
-
 def cosine_neardup_lsh(
     vectors: DataFrame,
     dim: int,
@@ -335,127 +257,62 @@ def cosine_neardup_lsh(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    verify_impl: str = "gram",
 ) -> DataFrame:
     """Near-dup pairs at scale: multi-table hyperplane LSH candidates,
     then EXACT cosine verification — precision is exact, recall is the
     only approximation (for cos>=0.9 pairs, P(same bucket per table) =
     (1 - theta/pi)^H ~ 0.43 at H=8, so 6 tables give ~97% recall; tested
-    against the cross-join baseline). The self-join is an equi-join on
-    (table, bucket) — no cross join at any scale.
+    against the cross-join baseline). No cross join at any scale.
 
-    `verify_impl`:
-
-    * 'gram' (default, r6): never materializes candidate PAIRS at all —
-      vectors group by (table, bucket) and each bucket's pairwise
-      cosines come from ONE BLAS gram matrix (`_gram_pairs_fn`), with
-      every screened-in pair re-scored by the sequential fold so the
-      emitted values are bit-identical to the Catalyst `dot` (pinned in
-      tests/test_similarity.py). The candidate-pair relation of the
-      'arrow'/'fold' paths is O(sum(bucket^2)) ROWS through a distinct
-      + two vector join-backs + a per-pair kernel; at sf1.0 that is
-      ~104M pair-slots and measured 183 s driver-run — the gram path
-      ships each vector once per table (8 rows of 64 doubles) and does
-      the 13 GFLOP of pair math inside BLAS (measured ~3 s at sf1.0).
-      Pair dedup across tables happens AFTER the threshold filter, on
-      the tiny survivor set.
-    * 'arrow' scores materialized candidates with the Arrow-batched
-      sequential-order numpy kernel — bit-identical values to the
-      Catalyst fold (see _dot_seq_arrow); measured 2.9 s at sf0.1 but
-      O(candidates) boundary traffic (two 64-double vectors per pair).
-    * 'fold' keeps the pure-JVM fold (the oracle-twin proof path,
-      pinned equal in tests). Measured at sf0.1/814k candidates: 3.8 s
-      fold vs 7.0 s for the r3 literal-plane formulation."""
-    if verify_impl == "gram":
-        # buckets for all tables in one narrow Arrow pass (bit-equal to
-        # lsh_band_table — see lsh_buckets_arrow), exploded to
-        # (tbl, bkt) rows that CARRY the vector: no join, one exchange
-        # (the applyInPandas grouping) in the whole plan
-        bkts = lsh_buckets_arrow(dim, n_planes, n_tables, seed)
-        grouped = (
-            vectors.select(
-                F.col(id_col).alias("_gid"),
-                F.col(vec_col).alias("_gvec"),
-                bkts(F.col(vec_col)).alias("_bkts"),
-            )
-            .select(
-                "_gid",
-                "_gvec",
-                F.explode(
-                    F.transform(
-                        F.col("_bkts"),
-                        lambda b, t: F.struct(t.alias("tbl"), b.alias("bkt")),
-                    )
-                ).alias("_tb"),
-            )
-            .select("_tb.tbl", "_tb.bkt", "_gid", "_gvec")
+    Candidate PAIRS are never materialized (r6): vectors group by
+    (table, bucket) and each bucket's pairwise cosines come from ONE
+    BLAS gram matrix (`_gram_pairs_fn`), with every screened-in pair
+    re-scored by the sequential fold so the emitted values are
+    bit-identical to the Catalyst `dot` (pinned against the crossJoin
+    baseline in tests/test_similarity.py and by the DuckDB oracle of
+    embedding_neardup_lsh). The r5 plan joined bucket tables into a
+    candidate-pair relation — O(sum(bucket^2)) ROWS through a distinct
+    + two vector join-backs + a per-pair fold; at sf1.0 that is ~104M
+    pair-slots and measured 183 s end to end — while this ships each
+    vector once per table (8 rows of 64 doubles) and does the 13 GFLOP
+    of pair math inside BLAS (measured ~3 s at sf1.0). Pair dedup
+    across tables happens AFTER the threshold filter, on the tiny
+    survivor set."""
+    # buckets for all tables in one narrow Arrow pass (see
+    # lsh_buckets_arrow), exploded to (tbl, bkt) rows that CARRY the
+    # vector: no join, one exchange (the applyInPandas grouping) in the
+    # whole plan
+    bkts = lsh_buckets_arrow(dim, n_planes, n_tables, seed)
+    grouped = (
+        vectors.select(
+            F.col(id_col).alias("_gid"),
+            F.col(vec_col).alias("_gvec"),
+            bkts(F.col(vec_col)).alias("_bkts"),
         )
-        # groupBy directly: a balanced-key repartition was measured here
-        # and REGRESSED slightly (the 128 buckets spread acceptably
-        # under the plain grouping exchange; adding a repartition only
-        # added an exchange)
-        pairs = grouped.groupBy("tbl", "bkt").applyInPandas(
-            _gram_pairs_fn(threshold), "a_id long, b_id long, cos double"
+        .select(
+            "_gid",
+            "_gvec",
+            F.explode(
+                F.transform(
+                    F.col("_bkts"),
+                    lambda b, t: F.struct(t.alias("tbl"), b.alias("bkt")),
+                )
+            ).alias("_tb"),
         )
-        # the same pair surviving in several tables carries IDENTICAL
-        # (deterministic) cosine bits — distinct on the survivor set is
-        # the cross-table dedup, paid on |output| rows, not candidates
-        return pairs.distinct().select(
-            "a_id", "b_id", F.round("cos", 6).alias("cos")
-        )
-    # Candidates travel as BARE ID PAIRS: at a loose threshold the
-    # candidate set is large (few buckets -> many collisions), and
-    # carrying two 64-float vectors per candidate through the join +
-    # dedup shuffle moved ~60x more bytes than the ids (measured 2x the
-    # whole query's wall time at sf0.1). Vectors join back once per side
-    # AFTER dedup, against the small vector relation.
-    #
-    # Keeping the pre-verify distinct was re-measured in r4: dropping it
-    # (dedup after the threshold filter) costs more in duplicate verify
-    # work than the distinct shuffle saves, at every verify impl
-    # (8.2 s/4.6 s vs 3.8 s/2.9 s) — the dup factor at this operating
-    # point outweighs one skinny-id shuffle.
-    #
-    # both self-join sides read `tables`; materializing the skinny
-    # (id, tbl, bkt) relation runs the bucketing ONCE instead of twice
-    tables = lsh_band_table(
-        vectors, dim, n_planes, n_tables, seed, id_col, vec_col
-    ).localCheckpoint(eager=True)
-    left = tables.select(F.col(id_col).alias("a_id"), "tbl", "bkt")
-    right = tables.select(F.col(id_col).alias("b_id"), "tbl", "bkt")
-    cand = (
-        left.join(right, ["tbl", "bkt"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+        .select("_tb.tbl", "_tb.bkt", "_gid", "_gvec")
     )
-    # norms are a per-VECTOR quantity: compute once and carry the scalar,
-    # so the per-pair verify is one dot product instead of three array
-    # folds (same arithmetic as cosine() — dot/(|a|*|b|) — so the SQL
-    # oracle's values are bit-identical)
-    v = vectors.select(
-        id_col, vec_col, l2_norm(F.col(vec_col)).alias("_nrm")
+    # groupBy directly: a balanced-key repartition was measured here
+    # and REGRESSED slightly (the 128 buckets spread acceptably
+    # under the plain grouping exchange; adding a repartition only
+    # added an exchange)
+    pairs = grouped.groupBy("tbl", "bkt").applyInPandas(
+        _gram_pairs_fn(threshold), "a_id long, b_id long, cos double"
     )
-    a_v = v.select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
-        F.col("_nrm").alias("a_nrm"),
-    )
-    b_v = v.select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
-        F.col("_nrm").alias("b_nrm"),
-    )
-    verified = cand.join(a_v, "a_id").join(b_v, "b_id")
-    if verify_impl == "arrow":
-        d = _dot_seq_arrow()(F.col("a_vec"), F.col("b_vec"))
-    else:
-        d = dot(F.col("a_vec"), F.col("b_vec"))
-    cos = d / (F.col("a_nrm") * F.col("b_nrm"))
-    return (
-        verified.withColumn("cos", cos)
-        .filter(F.col("cos") >= threshold)
-        .select("a_id", "b_id", F.round("cos", 6).alias("cos"))
+    # the same pair surviving in several tables carries IDENTICAL
+    # (deterministic) cosine bits — distinct on the survivor set is
+    # the cross-table dedup, paid on |output| rows, not candidates
+    return pairs.distinct().select(
+        "a_id", "b_id", F.round("cos", 6).alias("cos")
     )
 
 

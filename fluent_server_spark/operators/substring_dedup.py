@@ -16,16 +16,17 @@ fingerprints):
    array is O(total chars) too). The xxhash64 fingerprint stands in for
    the gram (2^-64 collision risk, same contract as the hashed-shingle
    ops).
-2. CANONICALIZE (one shuffle on the 8-byte hash, partial-aggregated):
-   grams with count > 1 are duplicated; the canonical occurrence is
-   min (doc, pos) — a deterministic global "first".
-3. MARK (equi-join on hash): every non-canonical occurrence of a
-   duplicated gram marks its k chars for removal. Overlapping marks
+2. CANONICALIZE (one shuffle on the 8-byte hash): per gram, occurrences
+   ranked by (doc, pos); rank 1 is the canonical occurrence — a
+   deterministic global "first".
+3. MARK (same window): every occurrence ranked past 1 is a copy of a
+   duplicated gram and marks its k chars for removal. Overlapping marks
    chain, so a duplicated span of ANY length >= k is covered end-to-end
    while its canonical copy is untouched (the canonical copy's grams
-   are the minima, never marked).
-4. MERGE (one window per doc): standard gaps-and-islands over the
-   marked [pos, pos+k) intervals -> maximal removal spans.
+   rank first, never marked).
+4. MERGE (one collect per doc): gaps-and-islands over the sorted
+   marked [pos, pos+k) intervals, as narrow array ops -> maximal
+   removal spans.
 5. CUT (narrow): rebuild each doc's text with a Catalyst fold over its
    sorted spans — no Python in the plan anywhere.
 
@@ -146,30 +147,29 @@ def _marked_positions(
     text_col: str,
     k: int,
     winnow_w: int | None,
-    impl: str,
 ) -> DataFrame:
     """(id, pos): every non-canonical occurrence of a duplicated gram —
-    the mark stream feeding the islands merge (see duplicate_spans for
-    the `impl` contract)."""
+    the mark stream feeding the islands merge.
+
+    ONE exchange of the gram stream on `h` and a single row_number per
+    gram (r6): a non-canonical occurrence is simply `rn > 1` (rn 2 can
+    only exist when the gram is duplicated, so the count predicate is
+    implied; the ordering (id, pos) is the global-first canonical rule).
+    The r5 shape — groupBy canonical + equi-join mark — evaluated the
+    O(total chars) gram explode TWICE and shuffled it twice (measured
+    ~12 s at sf1.0, 2.6M duplicated grams / 7.9M marked occurrences,
+    far too many for a broadcast); this halves the heavy volume
+    (measured ~7 s)."""
     if winnow_w is None:
         g = gram_positions(docs, id_col, text_col, k)
     else:
         g = winnowed_gram_positions(docs, id_col, text_col, k, winnow_w)
-    if impl == "window":
-        who = Window.partitionBy("h").orderBy(id_col, "pos")
-        return (
-            g.withColumn("_rn", F.row_number().over(who))
-            .filter(F.col("_rn") > 1)
-            .select(id_col, "pos")
-        )
-    occ = F.struct(F.col(id_col), F.col("pos"))
-    dup = (
-        g.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"), F.min(occ).alias("canon"))
-        .filter(F.col("c") > 1)
-        .select("h", "canon")
+    who = Window.partitionBy("h").orderBy(id_col, "pos")
+    return (
+        g.withColumn("_rn", F.row_number().over(who))
+        .filter(F.col("_rn") > 1)
+        .select(id_col, "pos")
     )
-    return g.join(dup, "h").filter(occ != F.col("canon")).select(id_col, "pos")
 
 
 def _span_arrays(marked: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -193,7 +193,7 @@ def _span_arrays(marked: DataFrame, id_col: str, k: int) -> DataFrame:
     the j-th start with the j-th end — exactly the (min pos, max pos + k)
     the islands groupBy produced, already sorted by start. The when()
     guards keep element_at off index 0 / past the end (ANSI-safe).
-    Pinned output-equal to the window islands path in
+    Pinned against the pure-Python reference in
     tests/test_substring_dedup.py."""
     ps = F.col("_ps")
     starts = F.filter(
@@ -227,63 +227,20 @@ def duplicate_spans(
     text_col: str = "text",
     k: int = 20,
     winnow_w: int | None = None,
-    impl: str = "window",
-    span_impl: str = "fold",
 ) -> DataFrame:
     """(id, start, end): maximal char spans to REMOVE — every occurrence
     of duplicated >= k-grams except the canonical (global-first) one,
     merged per doc. start is 1-based, end exclusive. `winnow_w` switches
     the fingerprint stage from exact stride-1 grams to the winnowing
     selection (see winnowed_gram_positions for the approximation
-    contract).
-
-    `impl` picks the canonicalize+mark physical shape (same output):
-
-    * 'window' (default, r6): ONE exchange of the gram stream on `h`
-      and a single row_number per gram — a non-canonical occurrence is
-      simply `rn > 1` (rn 2 can only exist when the gram is duplicated,
-      so the count predicate is implied; the ordering (id, pos) equals
-      the struct-min canonical rule). The r5 'join' shape evaluated the
-      O(total chars) gram explode TWICE (once under the groupBy, once
-      under the mark join) and shuffled it twice (partial-agg exchange
-      + join exchange: measured ~12 s at sf1.0, 2.6M duplicated grams /
-      7.9M marked occurrences — far too many for a broadcast);
-      'window' halves the heavy volume (measured ~7 s).
-    * 'join': groupBy canonical + equi-join mark (the r3-r5 shape,
-      kept as the oracle-twin proof path; pinned output-equal in
-      tests/test_substring_dedup.py).
-
-    `span_impl` picks the islands-merge shape (same spans): 'fold'
-    (default, r6) collects each doc's marks into one sorted array and
-    derives the spans with narrow array ops (see _span_arrays — drops
-    the Sort + two Window passes + the (doc, island) aggregate);
-    'window' keeps the r5 gaps-and-islands window machinery."""
-    marked = _marked_positions(docs, id_col, text_col, k, winnow_w, impl)
-    if span_impl == "fold":
-        return (
-            _span_arrays(marked, id_col, k)
-            .select(F.col(id_col), F.explode("_spans").alias("_sp"))
-            .select(id_col, "_sp.start", "_sp.end")
-        )
-    # gaps-and-islands: a mark covers [pos, pos+k); a new island starts
-    # when this mark begins after every previous mark's end
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_max_end = F.max(F.col("pos") + k).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    island = F.when(
-        prev_max_end.isNull() | (F.col("pos") > prev_max_end), 1
-    ).otherwise(0)
-    with_island = marked.withColumn(
-        "island", F.sum(island).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    contract). The spans are dedup_substrings' cuts, exploded from the
+    per-doc arrays of _span_arrays."""
     return (
-        with_island.groupBy(id_col, "island")
-        .agg(
-            F.min("pos").alias("start"),
-            (F.max("pos") + k).alias("end"),
+        _span_arrays(
+            _marked_positions(docs, id_col, text_col, k, winnow_w), id_col, k
         )
-        .select(id_col, "start", "end")
+        .select(F.col(id_col), F.explode("_spans").alias("_sp"))
+        .select(id_col, "_sp.start", "_sp.end")
     )
 
 
@@ -307,9 +264,7 @@ def dedup_substrings(
     the mark stream is aggregated ONCE per doc and goes straight into
     the cut fold."""
     per_doc = _span_arrays(
-        _marked_positions(docs, id_col, text_col, k, winnow_w, "window"),
-        id_col,
-        k,
+        _marked_positions(docs, id_col, text_col, k, winnow_w), id_col, k
     )
     text = F.col(text_col)
     # fold over sorted spans: carry (kept text so far, cursor); each span

@@ -24,7 +24,7 @@ from fluent_server_spark.functions.text import (
 from fluent_server_spark.operators.dedup import (
     _MERSENNE,
     exact_dedup,
-    jaccard_join_auto,
+    jaccard_join_blocks,
     minhash_coeffs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -135,18 +135,14 @@ JACCARD_THRESHOLD = 0.2
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs — THRESHOLD-AWARE similarity
-    join (operators/dedup.py::jaccard_join_auto): at this loose t=0.2
-    the overlap-COUNT kernel (inverted-index self-join + one hash agg,
-    Sarawagi-Kirpal/Vernica) replaces prefix-filter + array verify,
-    measured 4x at sf0.1; tight thresholds route to the prefix kernel.
-    Both are exact, so the oracle below — the IDENTICAL hashed-gram
-    jaccard as plain all-pairs SQL — is valid for either: kernel choice
-    is not oracle-visible, only the final pair set is. The O(n^2)
-    crossJoin variant survives only as the pytest baseline
-    (`ngram_jaccard_pairs` operator) — it is no longer a driver/bench
-    query shape."""
-    return jaccard_join_auto(
+    """Exact 3-gram Jaccard near-dup pairs via the block-pair overlap
+    counting join (operators/dedup.py::jaccard_join_blocks): each task
+    counts shared hashed grams for one pair of doc blocks in numpy and
+    emits only pairs at or above t. The oracle below is the IDENTICAL
+    hashed-gram jaccard as plain all-pairs SQL. The O(n^2) crossJoin
+    variant survives only as the pytest baseline (`ngram_jaccard_pairs`
+    operator) — it is not a registry/bench query shape."""
+    return jaccard_join_blocks(
         spread(load_table(spark, sf_dir, "documents")), threshold=JACCARD_THRESHOLD
     )
 
@@ -158,7 +154,7 @@ WITH sh AS (
          -- F.slice/concat_ws partial shingle for docs with < n words
          -- (w[i+2] indexing would yield NULL grams there and diverge);
          -- grams hash to the same 60-bit md5 ints the Spark side
-         -- verifies on (operators/dedup.py::hash_shingle)
+         -- verifies on (operators/dedup.py::with_hashed_shingles)
          list_distinct(list_transform(
            list_transform(
              range(1, greatest(len(w) - 2, 1) + 1),

@@ -21,7 +21,7 @@ DOCS = [
 QUERIES = [(0, "quick fox"), (1, "lazy dog"), (2, "spark turtle")]
 
 
-def _py_bm25(docs, queries, k1=1.2, b=0.75):
+def _py_bm25(docs, queries, k1=1.2, b=0.75, max_df=None):
     corpus = {i: t.lower().split() for i, t in docs}
     n = len(corpus)
     avgdl = sum(len(ts) for ts in corpus.values()) / n
@@ -29,6 +29,8 @@ def _py_bm25(docs, queries, k1=1.2, b=0.75):
     for ts in corpus.values():
         for t in set(ts):
             df[t] = df.get(t, 0) + 1
+    if max_df is not None:  # stop terms contribute nothing
+        df = {t: c for t, c in df.items() if c <= max_df * n}
     out = {}
     for qid, q in queries:
         scores = {}
@@ -55,18 +57,20 @@ def corpus(spark):
 
 def test_matches_python_reference(spark, corpus):
     docs, qs = corpus
-    got = bm25_topk(docs, qs, k=10).collect()
-    exp = _py_bm25(DOCS, QUERIES)
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for qid, rows in by_q.items():
-        rows.sort(key=lambda r: r["rk"])
-        assert [r["doc_id"] for r in rows] == [d for d, _ in exp[qid]]
-        for r, (_, s) in zip(rows, exp[qid]):
-            assert abs(r["score"] - s) < 1e-6, (qid, r, s)
-    # every query with any matching doc appears
-    assert set(by_q) == {qid for qid, hits in exp.items() if hits}
+    # 0.5 keeps 'dog'/'fox' (df 3 of 6, the cap is inclusive); 0.4 drops them
+    for max_df in (None, 0.5, 0.4):
+        got = bm25_topk(docs, qs, k=10, max_df=max_df).collect()
+        exp = _py_bm25(DOCS, QUERIES, max_df=max_df)
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r["query_id"], []).append(r)
+        for qid, rows in by_q.items():
+            rows.sort(key=lambda r: r["rk"])
+            assert [r["doc_id"] for r in rows] == [d for d, _ in exp[qid]], max_df
+            for r, (_, s) in zip(rows, exp[qid]):
+                assert abs(r["score"] - s) < 1e-6, (max_df, qid, r, s)
+        # every query with any matching doc appears
+        assert set(by_q) == {qid for qid, hits in exp.items() if hits}, max_df
 
 
 def test_index_shapes(spark, corpus):
@@ -140,24 +144,3 @@ def test_empty_corpus_and_no_match_query(spark):
     docs2 = spark.createDataFrame([(1, "alpha beta")], "doc_id int, text string")
     qs2 = spark.createDataFrame([(0, "zzz qqq")], "query_id int, query string")
     assert bm25_topk(docs2, qs2, k=5).count() == 0
-
-
-def test_narrow_impl_matches_agg_impl(spark, corpus):
-    """r6: the narrow (query-term membership) physical shape must be
-    row-identical to the full inverted-index build — same integers in,
-    same rounded scores out."""
-    docs, qs = corpus
-    agg = sorted(map(tuple, bm25_topk(docs, qs, k=4, impl="agg").collect()))
-    nar = sorted(map(tuple, bm25_topk(docs, qs, k=4, impl="narrow").collect()))
-    assert agg == nar
-
-
-def test_narrow_impl_max_df(spark, corpus):
-    docs, qs = corpus
-    agg = sorted(
-        map(tuple, bm25_topk(docs, qs, k=4, max_df=0.5, impl="agg").collect())
-    )
-    nar = sorted(
-        map(tuple, bm25_topk(docs, qs, k=4, max_df=0.5, impl="narrow").collect())
-    )
-    assert agg == nar

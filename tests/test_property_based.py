@@ -269,7 +269,7 @@ def test_global_ntile_property_matches_window(spark, values, n, n_part):
     assert got == want
 
 
-# --------------------------------------------- jaccard count kernel (r4)
+# ------------------------------------------- jaccard block-pair count join
 
 doc_text = st.text(alphabet="ab cd", min_size=0, max_size=40)
 
@@ -277,10 +277,11 @@ doc_text = st.text(alphabet="ab cd", min_size=0, max_size=40)
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(doc_text, min_size=2, max_size=12), st.sampled_from([0.1, 0.3, 0.6]))
 def test_jaccard_count_kernel_matches_set_oracle(spark, batch, threshold):
-    """The overlap-count kernel must equal a pure-Python shingle-set
-    jaccard on RANDOM corpora — tiny vocab ('ab'/'cd' words) maximizes
-    gram collisions, short docs exercise the partial-shingle clamp."""
-    from fluent_server_spark.operators.dedup import jaccard_join_count
+    """The block-pair overlap-count join (jaccard_join_blocks) must
+    equal a pure-Python shingle-set jaccard on RANDOM corpora — tiny
+    vocab ('ab'/'cd' words) maximizes gram collisions, short docs
+    exercise the partial-shingle clamp."""
+    from fluent_server_spark.operators.dedup import jaccard_join_blocks
 
     def grams(text: str) -> frozenset[str]:
         ws = re.split(r"\s+", text.strip().lower())
@@ -303,7 +304,7 @@ def test_jaccard_count_kernel_matches_set_oracle(spark, batch, threshold):
     )
     got = {
         (r.a_id, r.b_id): r.jaccard
-        for r in jaccard_join_count(df, threshold=threshold).collect()
+        for r in jaccard_join_blocks(df, threshold=threshold).collect()
     }
     assert got == want
 

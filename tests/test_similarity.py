@@ -138,40 +138,39 @@ def test_multiprobe_lsh_raises_recall_monotonically(spark, vec_df, vecs):
     assert last_recall >= 0.9
 
 
-def test_band_table_matches_literal_buckets(spark, vec_df):
-    """The broadcast-planes band table must assign bit-identical buckets
-    to the literal-plane projection it replaced (same per-plane dot fold;
-    integer bit assembly is order-free)."""
-    from fluent_server_spark.operators.similarity import lsh_band_table
-
-    lit_rows = set()
-    wb = vec_df
-    for t in range(3):
-        wb = with_lsh_bucket(wb, dim=DIM, n_planes=4, seed=42 + 1000 * t,
-                             out=f"_b{t}")
-    for r in wb.collect():
-        for t in range(3):
-            lit_rows.add((r["vec_id"], t, r[f"_b{t}"]))
-    bt = lsh_band_table(vec_df, dim=DIM, n_planes=4, n_tables=3, seed=42)
-    got = {(r["vec_id"], r["tbl"], r["bkt"]) for r in bt.collect()}
-    assert got == lit_rows
-
-
-def test_neardup_lsh_arrow_verify_bit_equal_to_fold(spark, vec_df):
-    """The Arrow sequential-order verify kernel must produce the exact
-    rows (ids AND rounded cosines) of the pure-JVM fold path."""
-    from fluent_server_spark.operators.similarity import cosine_neardup_lsh
-
-    fold = sorted(
-        tuple(r)
-        for r in cosine_neardup_lsh(
-            vec_df, dim=DIM, threshold=0.9, verify_impl="fold"
-        ).collect()
+def test_band_table_matches_literal_buckets(spark, vec_df, vecs):
+    """The multi-table bucket kernel (lsh_buckets_arrow, 3 tables) must
+    equal buckets computed from the literal _hyperplanes with a plain
+    sequential dot (acc = acc + v_k * p_k in index order, the
+    association every oracle replays); with_lsh_bucket is table 0 of
+    the same kernel."""
+    from fluent_server_spark.operators.similarity import (
+        _hyperplanes,
+        lsh_buckets_arrow,
     )
-    arrow = sorted(
-        tuple(r)
-        for r in cosine_neardup_lsh(
-            vec_df, dim=DIM, threshold=0.9, verify_impl="arrow"
-        ).collect()
-    )
-    assert arrow == fold and len(fold) > 0
+
+    n_planes, n_tables, seed = 4, 3, 42
+    want = {}
+    for i, v in enumerate(vecs):
+        row = []
+        for t in range(n_tables):
+            bkt = 0
+            for bit, p in enumerate(_hyperplanes(DIM, n_planes, seed + 1000 * t)):
+                acc = 0.0
+                for x, y in zip(v.tolist(), p):
+                    acc = acc + x * y
+                bkt += int(acc > 0) << bit
+            row.append(bkt)
+        want[i] = row
+    bkts = lsh_buckets_arrow(DIM, n_planes, n_tables, seed)
+    got = {
+        r.vec_id: list(r.b)
+        for r in vec_df.select("vec_id", bkts(F.col("embedding")).alias("b")).collect()
+    }
+    assert got == want
+    assert len({tuple(b) for b in want.values()}) > 1  # planes split the data
+    single = {
+        r.vec_id: r.bucket
+        for r in with_lsh_bucket(vec_df, dim=DIM, n_planes=n_planes, seed=seed).collect()
+    }
+    assert single == {i: b[0] for i, b in want.items()}

@@ -13,7 +13,7 @@ from fluent_server_spark.operators.substring_dedup import (
 )
 
 
-def _py_reference(docs: dict[int, str], k: int) -> dict[int, str]:
+def _py_spans(docs: dict[int, str], k: int) -> dict[int, list[list[int]]]:
     occ: dict[str, list[tuple[int, int]]] = {}
     for did in sorted(docs):
         t = docs[did]
@@ -27,13 +27,21 @@ def _py_reference(docs: dict[int, str], k: int) -> dict[int, str]:
                 if o != canon:
                     marks[o[0]].add(o[1])
     out = {}
-    for did, t in docs.items():
+    for did in docs:
         spans: list[list[int]] = []
         for p in sorted(marks[did]):
             if spans and p <= spans[-1][1]:
                 spans[-1][1] = max(spans[-1][1], p + k)
             else:
                 spans.append([p, p + k])
+        out[did] = spans
+    return out
+
+
+def _py_reference(docs: dict[int, str], k: int) -> dict[int, str]:
+    out = {}
+    for did, spans in _py_spans(docs, k).items():
+        t = docs[did]
         parts, cur = [], 1
         for s, e in spans:
             parts.append(t[cur - 1 : s - 1])
@@ -121,6 +129,24 @@ def test_randomized_against_reference(spark):
         docs[i] = body
     for k in (12, 25):
         assert _run(spark, docs, k) == _py_reference(docs, k)
+
+    # a 40-doc corpus with a planted boilerplate paragraph in every third
+    # doc and a repeated head in many: spans and cut text vs the reference
+    rng = random.Random(77)
+    boiler = "shared boilerplate paragraph appearing in many documents here"
+    docs = {}
+    for i in range(40):
+        body = "".join(rng.choice("abcdefg ") for _ in range(rng.randint(10, 160)))
+        docs[i] = body + (boiler if i % 3 == 0 else "") + body[: rng.randint(0, 30)]
+    assert _run(spark, docs, 12) == _py_reference(docs, 12)
+    sdf = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+    got = sorted(
+        (r.doc_id, r.start, r.end) for r in duplicate_spans(sdf, k=12).collect()
+    )
+    want = sorted(
+        (d, s, e) for d, spans in _py_spans(docs, 12).items() for s, e in spans
+    )
+    assert got == want and len(want) > 0
 
 
 def test_winnowing_matches_paper_selection_rule(spark):
@@ -227,34 +253,3 @@ def test_winnowed_selection_adds_no_exchange(spark):
         .toString()
     )
     assert "Exchange" not in plan
-
-
-def test_span_fold_equals_window_islands(spark):
-    """Review r6: pin the fold islands path (default) output-equal to
-    the r5 window machinery on randomized corpora with planted shared
-    spans — both plain and winnowed gram selection."""
-    import random
-
-    from fluent_server_spark.operators.substring_dedup import duplicate_spans
-
-    rng = random.Random(77)
-    boiler = "shared boilerplate paragraph appearing in many documents here"
-    docs = {}
-    for i in range(40):
-        body = "".join(rng.choice("abcdefg ") for _ in range(rng.randint(10, 160)))
-        docs[i] = body + (boiler if i % 3 == 0 else "") + body[: rng.randint(0, 30)]
-    sdf = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    for winnow_w in (None, 4):
-        fold = sorted(
-            (r.doc_id, r.start, r.end)
-            for r in duplicate_spans(
-                sdf, k=12, winnow_w=winnow_w, span_impl="fold"
-            ).collect()
-        )
-        win = sorted(
-            (r.doc_id, r.start, r.end)
-            for r in duplicate_spans(
-                sdf, k=12, winnow_w=winnow_w, span_impl="window"
-            ).collect()
-        )
-        assert fold == win and len(fold) > 0, winnow_w
